@@ -101,24 +101,27 @@ def tracked_persist(df: DataFrame) -> DataFrame:
 
 def track_release(df: DataFrame) -> DataFrame:
     """Register an ALREADY-materialized frame for release_persisted
-    WITHOUT re-persisting it. For handles whose blocks were persisted
-    inside an operator's loop (e.g. duplicate_clusters' final labels
-    round): calling persist() again would stack a second plan-level
-    cache over a localCheckpoint'd frame, but the existing blocks still
-    need a release hook (r11 ADVICE — the final persist()'d labels
-    frame was never released once the operator began returning a
-    projection of it)."""
+    WITHOUT re-persisting it. For handles whose blocks were persisted or
+    cut (tracked_local_checkpoint) inside an operator's loop (e.g.
+    duplicate_clusters' final labels round): calling persist() again
+    would stack a second plan-level cache over a localCheckpoint'd
+    frame, but the existing blocks still need a release hook (r11
+    ADVICE — the final labels frame was never released once the
+    operator began returning a projection of it)."""
     _TRACKED.append(df)
     return df
 
 
 def release_persisted() -> int:
-    """Unpersist every tracked DataFrame; returns how many were released.
-    Safe to call at any time — a released frame recomputes if re-used."""
+    """Unpersist every tracked DataFrame and free the storage of every
+    tracked lineage cut; returns how many were released. Safe to call at
+    any time — a released persisted frame recomputes if re-used (a
+    released cut is dead, like after free_local_checkpoint)."""
     n = 0
     for df in _TRACKED:
         try:
             df.unpersist()
+            free_local_checkpoint(df)
             n += 1
         except Exception:
             pass  # session already stopped; nothing to free
@@ -175,11 +178,13 @@ def free_local_checkpoint(df: DataFrame) -> None:
     is DEAD afterwards (checkpoint storage has no lineage to recompute
     from) — only call once nothing will ever read it again (e.g. the
     previous iteration's vocab after the next round materialized)."""
-    path = getattr(df, "_ckpt_stage_path", None)
+    # instance attributes only: a missing attribute would fall through to
+    # DataFrame.__getattr__, which resolves the schema over py4j
+    path = vars(df).get("_ckpt_stage_path")
     if path is not None:
         shutil.rmtree(path, ignore_errors=True)
         return
-    ids = getattr(df, "_ckpt_rdd_ids", [])
+    ids = vars(df).get("_ckpt_rdd_ids", [])
     if not ids:
         return
     try:

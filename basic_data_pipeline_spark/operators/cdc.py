@@ -4,17 +4,25 @@ The Spark-first re-expression of the reference consumer's pipeline
 (/root/reference/consumer_to_file.py:195-257). The reference is a
 row-at-a-time poll loop (one JSON parse + one HTTP insert per message);
 here each stage is a declarative DataFrame transform so a micro-batch of
-millions of events is one columnar plan:
+millions of events is one columnar plan, run as one pass per table:
 
   raw (topic/value)                               [Kafka or any source]
     → decode_envelopes      from_json, payload projection     (S3, P1)
     → route: table column   element_at(split(topic)), prefix  (S1, S4)
+    → probe                 ONE collect per batch, grouped by
+                            (table, partition): op counts, payload
+                            key sets, max upsert offset
     → split by op           c/u/r → upserts, d → deletes      (P2)
-    → extract as strings    from_json(all-string schema)
-    → normalize             normalize_value as expressions    (P3, §1.2)
-    → validate + cast       try_cast per column → good | DLQ  (S11)
-    → apply                 append | compact (window rn=1),
-                            delete (left_anti)                (S7, S10, §2.5)
+    → RecordPlan            built per (table, schema) on first sight
+                            or drift, kept on the sink:
+                            extract as strings → normalize
+                            (P3, §1.2) → validate + cast      (S11)
+    → flagged (persisted)   good | DLQ; bad rows counted by an
+                            Observation on the good path
+    → apply, ONE write      append | compact (window rn=1);
+                            deletes cut in the same write     (S7, S10, §2.5)
+    → DLQ                   appended when the table write's observed
+                            bad-row count is non-zero
 
 Schema lifecycle (S8/S9): the first batch of a table infers its record
 schema (spark.read.json over the raw after-JSON = the reference's
@@ -33,10 +41,11 @@ probe-retry NameError (:229) is replaced by vectorized validation.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
-from typing import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
@@ -184,32 +193,33 @@ def merge_schemas(existing: T.StructType, batch: T.StructType) -> T.StructType:
     )
 
 
-def extract_string_records(events: DataFrame, schema: T.StructType) -> DataFrame:
-    """Decode after-JSON into all-string columns + CDC metadata. Values stay
-    strings until validation so bad values survive to the DLQ intact.
+def _record_stages(schema: T.StructType, meta: Sequence[str]) -> list[list[Column]]:
+    """Select lists turning upsert events into normalized all-string
+    records: decode the after-JSON into all-string columns (values stay
+    strings until validation so bad values survive to the DLQ intact),
+    then normalize_value per column (consumer_to_file.py:88-113:
+    null→'', true/false→1/0, numerics>1e12→//1000, JSON containers and
+    other strings pass through).
 
     Meta columns are re-namespaced to ``_cdc_*`` here: a source table may
     legitimately have columns named op/offset/partition/ts_ms — without
     the prefix those would collide with the CDC bookkeeping columns and
     every downstream reference would be ambiguous."""
     sschema = T.StructType([T.StructField(f.name, T.StringType()) for f in schema.fields])
-    meta = [c for c in META_COLS if c in events.columns]
-    rec = events.withColumn("_rec", F.from_json("after", sschema))
-    return rec.select(
-        *[F.col(c).alias(f"_cdc_{c}") for c in meta],
-        *[F.col(f"_rec.{f.name}").alias(f.name) for f in schema.fields],
-    )
-
-
-def normalize_records(records: DataFrame, schema: T.StructType) -> DataFrame:
-    """normalize_value per column, as one projection (consumer_to_file.py:
-    88-113): null→'', true/false→1/0, numerics>1e12→//1000, JSON
-    containers/other strings pass through."""
-    meta = [c for c in records.columns if c not in {f.name for f in schema.fields}]
-    return records.select(
-        *[F.col(c) for c in meta],
-        *[normalize_string_value(F.col(f.name)).alias(f.name) for f in schema.fields],
-    )
+    rec = F.col("_rec")
+    return [
+        [
+            *[F.col(c).alias(f"_cdc_{c}") for c in meta],
+            F.from_json("after", sschema).alias("_rec"),
+        ],
+        [
+            *[F.col(f"_cdc_{c}") for c in meta],
+            *[
+                normalize_string_value(rec.getField(f.name)).alias(f.name)
+                for f in schema.fields
+            ],
+        ],
+    ]
 
 
 def _typed_value(c: F.Column, dtype: T.DataType) -> F.Column:
@@ -224,10 +234,30 @@ def _typed_value(c: F.Column, dtype: T.DataType) -> F.Column:
     return c.try_cast(dtype.simpleString())
 
 
+@dataclass(frozen=True)
+class Validation:
+    """The validate step as reusable select lists (see validate_and_cast).
+    Unresolved column expressions bind to whichever frame selects them, so
+    one Validation serves every batch of the same schema."""
+
+    flag: list[Column]  # records → records + _bad_col (NULL = valid row)
+    good: list[Column]  # valid rows → typed sink rows
+    dlq: list[Column]  # invalid rows → (table, column, value, error, payload)
+
+    def good_rows(self, flagged: DataFrame) -> DataFrame:
+        return flagged.filter(F.col("_bad_col").isNull()).select(*self.good)
+
+    def dlq_rows(self, flagged: DataFrame) -> DataFrame:
+        return flagged.filter(F.col("_bad_col").isNotNull()).select(*self.dlq)
+
+
 def validate_and_cast(
-    records: DataFrame, schema: T.StructType
-) -> tuple[DataFrame, DataFrame]:
-    """Split a normalized all-string batch into (typed good rows, DLQ).
+    schema: T.StructType, meta: Sequence[str], table_col: str | None = None
+) -> Validation:
+    """Build the split of a normalized all-string batch into typed good
+    rows and DLQ rows. ``meta`` names the non-record columns carried
+    through; ``table_col`` (one of them) names the DLQ rows' table and is
+    left out of the good rows.
 
     The reference pinpoints a bad column by re-inserting the row one column
     at a time against the live sink (consumer_to_file.py:226-235 — N HTTP
@@ -243,32 +273,92 @@ def validate_and_cast(
         c = F.col(f.name)
         bad = c.isNotNull() & (c != "") & _typed_value(c, f.dataType).isNull()
         checks.append(F.when(bad, F.lit(f.name)))
-    meta = [c for c in records.columns if c not in {f.name for f in schema.fields}]
-
-    if checks:
-        flagged = records.withColumn("_bad_col", F.coalesce(*checks))
-    else:
-        flagged = records.withColumn("_bad_col", F.lit(None).cast("string"))
-
-    good = flagged.filter(F.col("_bad_col").isNull()).select(
-        *[F.col(c) for c in meta],
-        *[_typed_value(F.col(f.name), f.dataType).alias(f.name) for f in schema.fields],
-    )
+    bad_col = F.coalesce(*checks) if checks else F.lit(None).cast("string")
+    fields = [F.col(f.name) for f in schema.fields]
     bad_value = F.coalesce(
         *[
             F.when(F.col("_bad_col") == f.name, F.col(f.name))
             for f in schema.fields
         ]
     ) if schema.fields else F.lit(None).cast("string")
-    tbl_col = next((c for c in ("_cdc_table", "table") if c in records.columns), None)
-    dlq = flagged.filter(F.col("_bad_col").isNotNull()).select(
-        F.col(tbl_col).alias("table") if tbl_col else F.lit("").alias("table"),
-        F.col("_bad_col").alias("column"),
-        bad_value.alias("value"),
-        F.lit("cast_error").alias("error"),
-        F.to_json(F.struct(*[F.col(f.name) for f in schema.fields])).alias("payload"),
+    return Validation(
+        flag=[*[F.col(c) for c in meta], *fields, bad_col.alias("_bad_col")],
+        good=[
+            *[F.col(c) for c in meta if c != table_col],
+            *[_typed_value(F.col(f.name), f.dataType).alias(f.name) for f in schema.fields],
+        ],
+        dlq=[
+            F.col(table_col).alias("table") if table_col else F.lit("").alias("table"),
+            F.col("_bad_col").alias("column"),
+            bad_value.alias("value"),
+            F.lit("cast_error").alias("error"),
+            F.to_json(F.struct(*fields)).alias("payload"),
+        ],
     )
-    return good, dlq
+
+
+@dataclass(frozen=True)
+class RecordPlan:
+    """A table's per-batch projections, built once per (schema, event
+    columns): on the table's first sight and on drift. Kept on the sink
+    next to ``record_schema``, so a steady batch builds no expressions.
+
+    ``stages`` take upsert events to the flagged records (extract →
+    normalize → validate flag); ``tombstone`` takes delete events to the
+    key plus the version columns the delete cut orders by."""
+
+    schema: T.StructType
+    meta: tuple[str, ...]
+    stages: list[list[Column]]
+    validation: Validation
+    tombstone: list[Column]
+    ord_cols: list[str]
+
+    def flagged(self, upserts: DataFrame) -> DataFrame:
+        return reduce(lambda df, cols: df.select(*cols), self.stages, upserts)
+
+
+def build_record_plan(
+    schema: T.StructType, meta: tuple[str, ...], key: str
+) -> RecordPlan:
+    validation = validate_and_cast(
+        schema, [f"_cdc_{c}" for c in meta], table_col="_cdc_table"
+    )
+    # delete tombstones: key from `before` (the ACTUAL key column —
+    # divergence from the reference's hardcoded `id`, :241), ordered by
+    # the same (source_ts_ms, ts_ms, offset) as the data rows so
+    # interleaved delete→re-insert sequences resolve correctly.
+    del_meta = [c for c in ("source_ts_ms", "ts_ms", "partition", "offset") if c in meta]
+    key_type = {f.name: f.dataType for f in schema.fields}[key]
+    tombstone = [
+        F.lit(DELETE_OP).alias("_cdc_op"),
+        *[F.col(c).alias(f"_cdc_{c}") for c in del_meta],
+        _typed_value(
+            normalize_string_value(F.get_json_object(F.col("before"), f"$.{key}")),
+            key_type,
+        ).alias(key),
+    ]
+    return RecordPlan(
+        schema=schema,
+        meta=meta,
+        stages=[*_record_stages(schema, meta), validation.flag],
+        validation=validation,
+        tombstone=tombstone,
+        ord_cols=[f"_cdc_{c}" for c in ("source_ts_ms", "ts_ms", "offset") if c in del_meta],
+    )
+
+
+def _delete_version(ord_cols: Sequence[str]) -> Column:
+    """A row's (source_ts_ms, ts_ms, offset) version for the delete cut.
+
+    The cut uses the FULL ordering — source_ts_ms alone is
+    millisecond-granular, and a re-insert sharing the delete's timestamp
+    must survive (struct comparison is lexicographic). Each component is
+    coalesced to -1: a NULL field (e.g. an envelope missing
+    source.ts_ms) would make the struct comparison NULL and silently DROP
+    a row that postdates the delete; with the sentinel, missing-version
+    rows sort before any real version."""
+    return F.struct(*[F.coalesce(F.col(c), F.lit(-1)) for c in ord_cols])
 
 
 def compact_latest(
@@ -335,6 +425,8 @@ class SinkTable:
     name: str
     key: str | None = None
     record_schema: T.StructType | None = None
+    # the batch projections for record_schema (see RecordPlan)
+    record_plan: RecordPlan | None = None
     created: bool = False
     # per-Kafka-partition high-water mark of applied offsets (replay
     # dedup); None = unknown, recovered lazily from the sink on restart
@@ -369,6 +461,33 @@ class SinkTable:
     def read(self) -> DataFrame:
         return self.spark.read.option("mergeSchema", "true").parquet(self.location)
 
+    def write_changes(
+        self, good: DataFrame | None, last_del: DataFrame | None, ord_cols: list[str]
+    ) -> None:
+        """Append-mode apply of one batch in ONE write: ``good`` rows are
+        appended, and a delete removes every version of its key at-or-before
+        it (ALTER TABLE … DELETE semantics, consumer_to_file.py:241-243)
+        while later re-inserts survive. ``last_del`` holds one
+        ``_del_ver`` per deleted key. With deletes the table is rewritten
+        once as (existing ∪ good) minus the cut versions — not appended,
+        read back and rewritten."""
+        if last_del is None:
+            if good is not None:
+                self.append(good)
+            return
+        if self.created:
+            full = self.read() if good is None else evolve_union(self.read(), good)
+        elif good is not None:
+            full = good
+        else:
+            return  # deletes before any create: nothing to cut
+        ver = _delete_version(ord_cols)
+        self.overwrite(
+            full.join(F.broadcast(last_del), on=self.key, how="left")
+            .filter(F.col("_del_ver").isNull() | (ver > F.col("_del_ver")))
+            .drop("_del_ver")
+        )
+
 
 def apply_cdc_batch(
     spark: SparkSession,
@@ -388,60 +507,58 @@ def apply_cdc_batch(
     per-table state across batches: the foreachBatch analog of the
     reference's `created_tables` set + per-table column cache
     (consumer_to_file.py:58,130).
+
+    A steady batch runs one driver collect (the probe) and one write per
+    table, plus the DLQ append when a table had invalid rows.
     """
     sinks = sinks if sinks is not None else {}
     # persisted: the decode runs once, not once per (table × probe/infer/
     # apply) — a large Kafka micro-batch would otherwise re-parse ~5× per
     # routed table
     events = decode_envelopes(raw).persist()
+    cols = events.columns
+    meta = tuple(c for c in META_COLS if c in cols)
 
-    # ONE aggregated driver round-trip replaces r1's distinct().collect()
-    # plus two take(1) probes PER TABLE (a serial job-launch tax at 100 TB
-    # micro-batch rates): per-table upsert/delete counts, plus the sorted
-    # JSON key sets of the upsert payloads. The key sets are the schema
-    # fingerprint — a steady-state batch whose keys are all already in the
-    # cached schema skips JSON inference entirely, so inference runs only
-    # on first sight of a table or on actual drift.
+    # ONE aggregated driver round-trip per batch, grouped by (table,
+    # partition): per-table upsert/delete counts, the sorted JSON key sets
+    # of the upsert payloads, and (replay dedup) the max upsert offset per
+    # Kafka partition. The key sets are the schema fingerprint — a
+    # steady-state batch whose keys are all already in the cached schema
+    # skips JSON inference entirely, so inference runs only on first sight
+    # of a table or on actual drift.
     is_upsert = F.col("op").isin(*UPSERT_OPS) & F.col("after").isNotNull()
-    probe = (
-        events.groupBy("table")
-        .agg(
-            F.sum(is_upsert.cast("long")).alias("n_upserts"),
-            F.sum((F.col("op") == DELETE_OP).cast("long")).alias("n_deletes"),
-            F.collect_set(
-                F.when(
-                    is_upsert,
-                    F.array_join(F.array_sort(F.json_object_keys("after")), ","),
-                )
-            ).alias("key_sets"),
-        )
-        .collect()
-    )
-    stats = {r["table"]: r for r in probe}
+    by_offset = dedup_replays and {"partition", "offset"} <= set(cols)
+    aggs = [
+        F.sum(is_upsert.cast("long")).alias("n_upserts"),
+        F.sum((F.col("op") == DELETE_OP).cast("long")).alias("n_deletes"),
+        F.collect_set(
+            F.when(
+                is_upsert,
+                F.array_join(F.array_sort(F.json_object_keys("after")), ","),
+            )
+        ).alias("key_sets"),
+    ]
+    if by_offset:
+        aggs.append(F.max(F.when(is_upsert, F.col("offset"))).alias("max_offset"))
+    group = ["table", "partition"] if "partition" in cols else ["table"]
+    stats: dict[str, dict] = {}
+    # replay dedup: this batch's max upsert offset per (table, partition)
+    batch_offmax: dict[str, dict[int, int]] = {}
+    for r in events.groupBy(*group).agg(*aggs).collect():
+        s = stats.setdefault(r["table"], {"n_upserts": 0, "n_deletes": 0, "keys": set()})
+        s["n_upserts"] += r["n_upserts"]
+        s["n_deletes"] += r["n_deletes"]
+        for ks in r["key_sets"]:
+            if ks:
+                s["keys"].update(ks.split(","))
+        if by_offset and r["max_offset"] is not None:
+            batch_offmax.setdefault(r["table"], {})[r["partition"]] = r["max_offset"]
 
-    # Replay dedup (append mode): per-(table, partition) max offsets of
-    # this batch, ONE extra driver round-trip when enabled. Combined with
-    # each sink's applied-offset high-water mark this upgrades append mode
-    # from at-least-once to effectively-once: a replayed epoch (crash
-    # between the parquet append and the checkpoint commit) is filtered
-    # out by offset, fully-replayed epochs skip their write entirely.
-    batch_offmax: dict[tuple[str, int], int] = {}
-    if dedup_replays and "offset" in events.columns:
-        for r in (
-            events.filter(is_upsert)
-            .groupBy("table", "partition")
-            .agg(F.max("offset").alias("m"))
-            .collect()
-        ):
-            batch_offmax[(r["table"], r["partition"])] = r["m"]
-
-    dlq_schema = "table string, column string, value string, error string, payload string"
-    dlq_all = spark.createDataFrame([], dlq_schema)
-
+    persisted = []
+    dlqs = []
     for tbl in sorted(stats):
         sub = events.filter(F.col("table") == tbl)
         upserts = sub.filter(is_upsert)
-        deletes = sub.filter(F.col("op") == DELETE_OP)
         if tbl not in sinks:
             sinks[tbl] = (
                 sink_factory(tbl)
@@ -455,12 +572,8 @@ def apply_cdc_batch(
 
         if has_upserts:
             cached = sink.record_schema
-            batch_keys: set[str] = set()
-            for ks in stats[tbl]["key_sets"]:
-                if ks:
-                    batch_keys.update(ks.split(","))
             known = {f.name for f in cached.fields} if cached is not None else set()
-            if cached is not None and batch_keys <= known:
+            if cached is not None and stats[tbl]["keys"] <= known:
                 # steady state: every payload key already typed — no
                 # inference scan, no extra job
                 schema = cached
@@ -478,32 +591,26 @@ def apply_cdc_batch(
         if sink.key is None:
             sink.key = pick_primary_key([f.name for f in schema.fields])
         key = sink.key
-        key_type = {f.name: f.dataType for f in schema.fields}[key]
+        plan = sink.record_plan
+        if plan is None or plan.schema != schema or plan.meta != meta:
+            plan = sink.record_plan = build_record_plan(schema, meta, key)
 
-        good = None
+        good = dlq = observed = None
         if has_upserts:
-            records = normalize_records(extract_string_records(upserts, schema), schema)
-            good, dlq = validate_and_cast(records, schema)
-            dlq_all = dlq_all.unionByName(dlq)
-            good = good.drop("_cdc_table")
-
-        # delete tombstones: key from `before` (the ACTUAL key column —
-        # divergence from the reference's hardcoded `id`, :241), ordered by
-        # the same (source_ts_ms, ts_ms, offset) as the data rows so
-        # interleaved delete→re-insert sequences resolve correctly.
-        tombstones = None
-        if has_deletes:
-            meta = [c for c in ("source_ts_ms", "ts_ms", "partition", "offset") if c in deletes.columns]
-            tombstones = deletes.select(
-                F.lit("d").alias("_cdc_op"),
-                *[F.col(c).alias(f"_cdc_{c}") for c in meta],
-                _typed_value(
-                    normalize_string_value(
-                        F.get_json_object(F.col("before"), f"$.{key}")
-                    ),
-                    key_type,
-                ).alias(key),
-            )
+            # read by the table write and by the DLQ write
+            flagged = plan.flagged(upserts).persist()
+            persisted.append(flagged)
+            dlq = plan.validation.dlq_rows(flagged)
+            # the bad-row count rides on the plan the table write runs,
+            # so the DLQ decision costs no job of its own
+            observed = Observation()
+            n_bad = F.sum(F.col("_bad_col").isNotNull().cast("long")).alias("n_bad")
+            good = plan.validation.good_rows(flagged.observe(observed, n_bad))
+        tombstones = (
+            sub.filter(F.col("op") == DELETE_OP).select(*plan.tombstone)
+            if has_deletes
+            else None
+        )
 
         parts = [p for p in (good, tombstones) if p is not None]
         if not parts:
@@ -513,16 +620,15 @@ def apply_cdc_batch(
             continue
 
         if mode == "compact":
-            merged = parts[0]
-            for p in parts[1:]:
-                merged = evolve_union(merged, p)
+            merged = reduce(evolve_union, parts)
             if sink.created:
                 merged = evolve_union(
                     merged, sink.read().withColumn("_cdc_op", F.lit("r"))
                 )
             sink.overwrite(compact_latest(merged, key=key).drop("_cdc_op"))
         else:
-            if good is not None and dedup_replays and "_cdc_offset" in good.columns:
+            new_wm = None
+            if good is not None and by_offset:
                 if sink.created and sink.applied_offsets is None:
                     # restart recovery: high-water marks from the sink
                     # itself — a 2-column pruned scan, once per table per
@@ -535,11 +641,7 @@ def apply_cdc_batch(
                         .collect()
                     }
                 wm = sink.applied_offsets or {}
-                batch_parts = {
-                    part: mx
-                    for (t, part), mx in batch_offmax.items()
-                    if t == tbl
-                }
+                batch_parts = batch_offmax.get(tbl, {})
                 if batch_parts and all(
                     mx <= wm.get(part, -1) for part, mx in batch_parts.items()
                 ):
@@ -555,57 +657,46 @@ def apply_cdc_batch(
                 new_wm = dict(wm)
                 for part, mx in batch_parts.items():
                     new_wm[part] = max(new_wm.get(part, -1), mx)
-            else:
-                new_wm = None
-            if good is not None:
-                sink.append(good.drop("_cdc_op"))
-            if tombstones is not None and sink.created:
-                # faithful append mode: a delete removes every version of
-                # the key at-or-before it (ALTER TABLE … DELETE semantics,
-                # consumer_to_file.py:241-243); later re-inserts survive.
-                # The cut uses the FULL (source_ts_ms, ts_ms, offset)
-                # ordering — source_ts_ms alone is millisecond-granular,
-                # and a re-insert sharing the delete's timestamp must
-                # survive (struct comparison is lexicographic). Each
-                # component is coalesced to -1: a NULL field (e.g. an
-                # envelope missing source.ts_ms) would make the struct
-                # comparison NULL and silently DROP a row that postdates
-                # the delete; with the sentinel, missing-version rows sort
-                # before any real version.
-                ord_cols = [
-                    c
-                    for c in ("_cdc_source_ts_ms", "_cdc_ts_ms", "_cdc_offset")
-                    if tombstones is not None and c in tombstones.columns
-                ]
-                ver = F.struct(
-                    *[F.coalesce(F.col(c), F.lit(-1)) for c in ord_cols]
+            last_del = (
+                tombstones.groupBy(key).agg(
+                    F.max(_delete_version(plan.ord_cols)).alias("_del_ver")
                 )
-                last_del = tombstones.groupBy(key).agg(
-                    F.max(ver).alias("_del_ver")
-                )
-                if hasattr(sink, "apply_delete_versions"):
-                    # relational sinks delete in place (the reference's
-                    # per-key ALTER TABLE … DELETE) instead of rewriting
-                    # the whole table
-                    sink.apply_delete_versions(last_del, key, ord_cols)
-                else:
-                    target = sink.read()
-                    remaining = (
-                        target.join(F.broadcast(last_del), on=key, how="left")
-                        .filter(
-                            F.col("_del_ver").isNull() | (ver > F.col("_del_ver"))
-                        )
-                        .drop("_del_ver")
-                    )
-                    sink.overwrite(remaining)
-            # advance the replay watermark only AFTER the append (and
-            # delete apply) succeeded: advancing first would make an
-            # in-process retry of a failed batch look already-applied and
-            # silently drop its rows.
+                if tombstones is not None
+                else None
+            )
+            # one write per table; the parquet sink folds the delete cut
+            # into it, a relational sink deletes in place
+            sink.write_changes(
+                good.drop("_cdc_op") if good is not None else None,
+                last_del,
+                plan.ord_cols,
+            )
+            # advance the replay watermark only AFTER the write
+            # succeeded: advancing first would make an in-process retry
+            # of a failed batch look already-applied and silently drop
+            # its rows.
             if new_wm is not None:
                 sink.applied_offsets = new_wm
 
-    if write_dlq and dlq_all.take(1):
+        if dlq is not None:
+            # Observation.get blocks until an action ran the observed
+            # plan: read it only after a write that ran `good` in full
+            # (every write above does); a skipped write (`good` dropped
+            # for a fully-replayed epoch) probes the DLQ frame instead
+            has_bad = observed.get["n_bad"] if good is not None else dlq.take(1)
+            if has_bad:
+                dlqs.append(dlq)
+
+    dlq_all = (
+        reduce(DataFrame.unionByName, dlqs)
+        if dlqs
+        else spark.createDataFrame(
+            [], "table string, column string, value string, error string, payload string"
+        )
+    )
+    if write_dlq and dlqs:
         dlq_all.write.mode("append").parquet(os.path.join(sink_root, "_dlq"))
+    for df in persisted:
+        df.unpersist()
     events.unpersist()
     return sinks, dlq_all

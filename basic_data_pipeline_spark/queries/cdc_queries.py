@@ -413,7 +413,8 @@ def cdc_validate_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = "doc_id long, n_chars long"
     from pyspark.sql.types import StructType
 
-    _, dlq = cdc.validate_and_cast(records, StructType.fromDDL(schema))
+    v = cdc.validate_and_cast(StructType.fromDDL(schema), ["table"], table_col="table")
+    dlq = v.dlq_rows(records.select(*v.flag))
     dlq_rows = dlq.select(
         F.lit("dlq").alias("kind"),
         F.col("table"),

@@ -6,8 +6,9 @@ The reference's core loop lands Kafka envelopes in an actual SQL store
 DDL, :204-250 batched INSERT, :241-243 ``ALTER TABLE … DELETE`` per
 key). ``SinkTable`` re-expresses that against parquet; ``JdbcSinkTable``
 re-expresses it against a real relational store over JDBC and
-duck-types ``SinkTable`` (``append``/``overwrite``/``read`` plus the
-``record_schema``/``key``/``created``/``applied_offsets`` state), so
+duck-types ``SinkTable`` (``append``/``overwrite``/``read``/
+``write_changes`` plus the ``record_schema``/``record_plan``/``key``/
+``created``/``applied_offsets`` state), so
 ``apply_cdc_batch`` drives either sink unchanged — pass
 ``sink_factory=lambda tbl: JdbcSinkTable(spark, url, tbl, …)``.
 
@@ -23,7 +24,8 @@ only the metadata operations Spark's writer can't express:
   table then swaps contents in ONE store transaction
   (DELETE + INSERT…SELECT, both store-side — no second data transfer),
   the relational analog of maintenance.atomic_overwrite's temp+rename;
-- ``apply_delete_versions`` is the reference's per-key
+- ``write_changes`` (the append-mode batch apply) appends, then runs
+  ``apply_delete_versions``, the reference's per-key
   ``ALTER TABLE … DELETE`` loop: version-aware in-place DELETEs, so the
   append-mode tombstone path never rewrites the table.
 
@@ -110,6 +112,7 @@ class JdbcSinkTable:
         self.driver = driver
         self.key = key
         self.record_schema: T.StructType | None = None
+        self.record_plan = None  # operators/cdc.RecordPlan for record_schema
         self.applied_offsets: dict[int, int] | None = None
         # Restart recovery: like SinkTable.__post_init__'s isdir probe,
         # an existing store table means evolution/delete/replay logic
@@ -253,6 +256,16 @@ class JdbcSinkTable:
 
     def read(self) -> DataFrame:
         return read_jdbc(self.spark, self.url, self.name, **self._write_opts())
+
+    def write_changes(
+        self, good: DataFrame | None, last_del: DataFrame | None, ord_cols: list[str]
+    ) -> None:
+        """Append-mode apply of one batch: append ``good``, then delete
+        in place (apply_delete_versions) — the store is never rewritten."""
+        if good is not None:
+            self.append(good)
+        if last_del is not None and self.created:
+            self.apply_delete_versions(last_del, self.key, ord_cols)
 
     # -- reference ALTER TABLE … DELETE (consumer_to_file.py:241-243) -----
 

@@ -4,17 +4,21 @@ The reference's consumer loop (consumer_to_file.py:195-257) maps to one
 streaming query: the Kafka source replaces poll(), checkpointing replaces
 its fresh-group-id-every-run replay policy (re-ingest = new checkpoint
 dir), and each micro-batch runs the same columnar apply pipeline as the
-batch path — upsert/delete/DLQ per table. Delivery: compact mode is
-effectively exactly-once across restarts (checkpointed offsets + an
-idempotent full overwrite per batch); append mode defaults to
-dedup_replays=True, which upgrades at-least-once to effectively-once: a
-crash between the parquet append and the checkpoint commit replays the
-epoch, but each sink keeps a per-Kafka-partition high-water mark of
-applied offsets (recovered from the sink's own _cdc_partition/_cdc_offset
-columns on restart) and already-applied rows are filtered by offset —
-fully-replayed epochs skip their write outright. Both modes are an
-upgrade over the reference, which re-reads from the earliest offset on
-EVERY restart by design (consumer_to_file.py:185-187).
+batch path (operators/cdc.apply_cdc_batch): one probe collect for the
+whole batch, then one pass per table — validated once through the
+table's cached RecordPlan, written once (upserts and deletes together),
+its DLQ decision read from that write's observed bad-row count.
+
+Delivery: compact mode is effectively exactly-once across restarts
+(checkpointed offsets + an idempotent full overwrite per batch); append
+mode defaults to dedup_replays=True, which upgrades at-least-once to
+effectively-once: a crash between the parquet write and the checkpoint
+commit replays the epoch, but each sink keeps a per-Kafka-partition
+high-water mark of applied offsets (recovered from the sink's own
+_cdc_partition/_cdc_offset columns on restart) and already-applied rows
+are filtered by offset — fully-replayed epochs skip their write outright.
+Both modes are an upgrade over the reference, which re-reads from the
+earliest offset on EVERY restart by design (consumer_to_file.py:185-187).
 
 Kafka itself isn't in the test container, so `ingest_kafka` is gated;
 tests drive the identical body through `ingest_files` (file source) and

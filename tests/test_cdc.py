@@ -301,13 +301,29 @@ def test_record_field_named_offset_does_not_collide(spark, tmp_path):
 
 # --- driver-action budget (VERDICT r1 "What's wrong" #2) ------------------
 
+def _count_calls(monkeypatch, owner, names) -> dict[str, int]:
+    """Count calls of ``owner.<name>`` for each name, delegating to the
+    real method."""
+    calls = dict.fromkeys(names, 0)
+    for name in names:
+        real = getattr(owner, name)
+
+        def counting(*a, _real=real, _name=name, **kw):
+            calls[_name] += 1
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(owner, name, counting)
+    return calls
+
+
 def test_steady_state_batch_skips_inference_and_bounds_driver_actions(
     spark, tmp_path, monkeypatch
 ):
     """After the first batch establishes a table's schema, a same-shape
-    batch must (a) not re-run JSON schema inference and (b) launch at most
-    2 collect/take driver round-trips (the aggregated probe + the DLQ
-    emptiness check) beyond the per-table writes."""
+    batch must (a) not re-run JSON schema inference, (b) launch exactly one
+    collect/take driver round-trip (the aggregated probe — the DLQ decision
+    comes from the table write's observed bad-row count) and (c) write the
+    table once, also when the batch carries deletes."""
     ts = 1_722_900_000_000
     wl1 = [
         Envelope(
@@ -323,41 +339,38 @@ def test_steady_state_batch_skips_inference_and_bounds_driver_actions(
         )
         for i in range(5)
     ]
+    wl3 = [
+        Envelope(
+            "dbserver1.testdb.employees", "u", None,
+            {"id": 1, "name": "e1y", "salary": 301}, ts + 200, 0, 200,
+        ),
+        Envelope(
+            "dbserver1.testdb.employees", "d",
+            {"id": 2, "name": "e2x", "salary": 202}, None, ts + 201, 0, 201,
+        ),
+    ]
     sinks, _ = cdc.apply_cdc_batch(
         spark, envelopes_to_df(spark, wl1), str(tmp_path), mode="append"
     )
 
-    infer_calls = {"n": 0}
-    real_infer = cdc.infer_record_schema
-
-    def counting_infer(*a, **kw):
-        infer_calls["n"] += 1
-        return real_infer(*a, **kw)
-
-    monkeypatch.setattr(cdc, "infer_record_schema", counting_infer)
-
     from pyspark.sql import DataFrame
 
-    actions = {"n": 0}
-    real_collect, real_take = DataFrame.collect, DataFrame.take
+    infer = _count_calls(monkeypatch, cdc, ["infer_record_schema"])
+    actions = _count_calls(monkeypatch, DataFrame, ["collect", "take"])
+    writes = _count_calls(monkeypatch, cdc.SinkTable, ["append", "overwrite"])
 
-    def counting_collect(self):
-        actions["n"] += 1
-        return real_collect(self)
-
-    def counting_take(self, n):
-        actions["n"] += 1
-        return real_take(self, n)
-
-    monkeypatch.setattr(DataFrame, "collect", counting_collect)
-    monkeypatch.setattr(DataFrame, "take", counting_take)
-
-    cdc.apply_cdc_batch(
-        spark, envelopes_to_df(spark, wl2), str(tmp_path),
-        mode="append", sinks=sinks,
-    )
-    assert infer_calls["n"] == 0, "steady-state batch must skip inference"
-    assert actions["n"] <= 2, f"driver actions per batch: {actions['n']}"
+    for wl in (wl2, wl3):
+        for counts in (actions, writes):
+            counts.update(dict.fromkeys(counts, 0))
+        cdc.apply_cdc_batch(
+            spark, envelopes_to_df(spark, wl), str(tmp_path),
+            mode="append", sinks=sinks,
+        )
+        assert infer["infer_record_schema"] == 0, "steady-state batch must skip inference"
+        assert sum(actions.values()) <= 1, f"driver actions per batch: {actions}"
+        assert sum(writes.values()) == 1, f"table writes per batch: {writes}"
+    rows = {(r["id"], r["name"]) for r in sinks["employees"].read().collect()}
+    assert not any(k == 2 for k, _ in rows) and (1, "e1y") in rows
 
 
 def test_drifted_batch_still_infers_new_columns(spark, tmp_path):
@@ -421,3 +434,58 @@ def test_replay_append_dedup_survives_crash_restart(spark, tmp_path, workload):
         spark, [mixed], str(tmp_path), mode="append", dedup_replays=True,
         )
     assert sinks["employees"].read().count() == baseline + 4
+
+
+def test_append_delete_reinsert_existing_key_in_one_batch(spark, tmp_path, workload):
+    """A key of an established table deleted and re-inserted inside one
+    append-mode batch goes through the single rewrite of (existing ∪
+    batch): the delete erases the key's older versions, the re-insert and
+    every other surviving version stay."""
+    ts = 1_722_990_000_000
+    live = expected_final_state(workload)
+    victim = min(live)
+    reinsert = dict(live[victim], name="Reborn")
+    tail = [
+        Envelope("dbserver1.testdb.employees", "d", live[victim], None, ts, 0, 5_000),
+        Envelope("dbserver1.testdb.employees", "c", None, reinsert, ts + 1, 0, 5_001),
+        Envelope(
+            "dbserver1.testdb.employees", "c", None,
+            dict(live[victim], id=7_000, name="Fresh"), ts + 2, 0, 5_002,
+        ),
+    ]
+    sinks = run_batches(
+        spark,
+        [envelopes_to_df(spark, workload), envelopes_to_df(spark, tail)],
+        str(tmp_path),
+        mode="append",
+    )
+    table = sinks["employees"].read()
+    assert table.count() == _surviving_history(workload + tail)
+    latest = {
+        r["id"]: r["name"]
+        for r in cdc.compact_latest(table, key="id").collect()
+    }
+    assert latest == {k: v["name"] for k, v in expected_final_state(workload + tail).items()}
+    assert latest[victim] == "Reborn"
+
+
+def test_fully_replayed_epoch_with_poison_row_writes_its_dlq_row(spark, tmp_path):
+    """A replayed epoch whose rows are all already applied skips the table
+    write, so no action runs the observed bad-row count: the DLQ decision
+    falls back to probing the DLQ frame, re-emits the poison row and
+    returns (an Observation read there would block forever)."""
+    wl = employee_workload(n_snapshot=4, n_ops=0, seed=3)
+    wl.append(
+        Envelope(
+            "dbserver1.testdb.employees", "c", None,
+            {"id": 99, "name": "Mallory", "position": "X", "salary": "not-a-number",
+             "updated_on": 1_722_999_000_000},
+            1_722_999_000_000, 0, 99,
+        )
+    )
+    first = envelopes_to_df(spark, wl[:4])  # establishes salary: double
+    epoch = envelopes_to_df(spark, wl[4:] + wl[:2])
+    sinks = run_batches(spark, [first, epoch, epoch], str(tmp_path), dedup_replays=True)
+    assert sinks["employees"].read().count() == 4
+    dlq = spark.read.parquet(str(tmp_path / "_dlq")).collect()
+    assert [(r["column"], r["value"]) for r in dlq] == [("salary", "not-a-number")] * 2

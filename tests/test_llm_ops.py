@@ -702,6 +702,33 @@ def test_duplicate_clusters_raises_on_nonconvergence(spark):
         dedup.duplicate_clusters(pairs, max_iters=2)
 
 
+def test_duplicate_clusters_releases_its_lineage_cuts(spark):
+    """With the default checkpoint_every=1 every round is a lineage cut:
+    no persistent RDD of the run is left after release_persisted() on
+    success, and on the non-convergence error nothing of the loop is
+    left behind. Compared as id sets: an earlier test's RDD may be
+    garbage-collected meanwhile, which would skew a plain count."""
+    from basic_data_pipeline_spark import caching
+
+    def persistent_ids() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1, 0.9) for i in range(40)],
+        "id_a long, id_b long, jaccard double",
+    )
+    caching.release_persisted()
+    baseline = persistent_ids()
+    assert dedup.duplicate_clusters(pairs).count() == 41
+    caching.release_persisted()
+    assert persistent_ids() <= baseline
+
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.duplicate_clusters(pairs, max_iters=2)
+    caching.release_persisted()
+    assert persistent_ids() <= baseline
+
+
 def test_cluster_survivors_matches_greedy_on_disjoint_pairs(docs):
     """On the fixture (planted dups are disjoint pairs) the cluster policy
     must equal greedy keep-lowest-id."""
